@@ -1812,22 +1812,20 @@ object Analytics {
     // pack the near-unique (pa, pb) count key onto one bigint exactly
     // as in Graphs.coEdges (same fan-out, same §2.3 narrowing); the
     // TakeOrdered tie-break is order-identical because ek = pa*base+pb
-    // is strictly monotone in lexicographic (pa, pb) below the bound
-    val mxRow = items.agg(max(col("pk"))).first()
-    val mxP = if (mxRow.isNullAt(0)) -1L else mxRow.getLong(0)
-    val top = if (mxP >= 0 && mxP <= 3037000498L) {
-      val base = mxP + 1
-      paired
-        .groupBy((col("a.pk") * base + col("b.pk")).as("ek"))
-        .agg(count(lit(1)).as("n_co"))
-        .orderBy(col("n_co").desc, col("ek")).limit(topK)
-        .select(expr(s"ek div $base").as("pa"),
-                pmod(col("ek"), lit(base)).as("pb"), col("n_co"))
-    } else {
-      paired
-        .groupBy(col("a.pk").as("pa"), col("b.pk").as("pb"))
-        .agg(count(lit(1)).as("n_co"))
-        .orderBy(col("n_co").desc, col("pa"), col("pb")).limit(topK)
+    // is strictly monotone in lexicographic (pa, pb) inside the guard
+    val top = Graphs.pairKeyBase(items, "pk") match {
+      case Some(base) =>
+        paired
+          .groupBy((col("a.pk") * base + col("b.pk")).as("ek"))
+          .agg(count(lit(1)).as("n_co"))
+          .orderBy(col("n_co").desc, col("ek")).limit(topK)
+          .select(expr(s"ek div $base").as("pa"),
+                  pmod(col("ek"), lit(base)).as("pb"), col("n_co"))
+      case None =>
+        paired
+          .groupBy(col("a.pk").as("pa"), col("b.pk").as("pb"))
+          .agg(count(lit(1)).as("n_co"))
+          .orderBy(col("n_co").desc, col("pa"), col("pb")).limit(topK)
     }
     // the k-row top side broadcasts into the parts-sized frequency
     // table (never the reverse: freq grows with the corpus)

@@ -28,10 +28,10 @@ object Graphs {
     * partial aggregate reduces nothing (sf0.1: 1.20M pair rows, 99.7%
     * distinct; the support filter then keeps ~3.6k) — so, exactly as
     * in [[seqEdges]], pack both endpoints into ONE bigint key when the
-    * part-key range provably fits ((mx+1)^2 < 2^63; one bounded max()
-    * over the items projection), unpacking after the filter keeps the
-    * edge set bit-identical, and larger ids fall back to the original
-    * two-key aggregate (guide §2.3: shuffle fewer bytes).
+    * part-key range provably allows it ([[pairKeyBase]]), unpacking
+    * after the filter keeps the edge set bit-identical, and other ids
+    * fall back to the original two-key aggregate (guide §2.3: shuffle
+    * fewer bytes).
     */
   private[graft] def coEdges(spark: SparkSession, dir: String,
                              minSupport: Int): DataFrame = {
@@ -40,23 +40,33 @@ object Graphs {
       .distinct()
     val paired = items.as("a").join(items.as("b"),
         col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
-    val mxRow = Tables.lineitem(spark, dir).agg(max(col("l_partkey"))).first()
-    val mxP = if (mxRow.isNullAt(0)) -1L else mxRow.getLong(0)
-    if (mxP >= 0 && mxP <= 3037000498L) {
-      val base = mxP + 1
-      paired
-        .groupBy((col("a.pk") * base + col("b.pk")).as("ek"))
-        .agg(count(lit(1)).as("n_co"))
-        .filter(col("n_co") >= minSupport)
-        .select(expr(s"ek div $base").as("pa"),
-                pmod(col("ek"), lit(base)).as("pb"))
-    } else {
-      paired
-        .groupBy(col("a.pk").as("pa"), col("b.pk").as("pb"))
-        .agg(count(lit(1)).as("n_co"))
-        .filter(col("n_co") >= minSupport)
-        .select("pa", "pb")
+    pairKeyBase(Tables.lineitem(spark, dir), "l_partkey") match {
+      case Some(base) =>
+        paired
+          .groupBy((col("a.pk") * base + col("b.pk")).as("ek"))
+          .agg(count(lit(1)).as("n_co"))
+          .filter(col("n_co") >= minSupport)
+          .select(expr(s"ek div $base").as("pa"),
+                  pmod(col("ek"), lit(base)).as("pb"))
+      case None =>
+        paired
+          .groupBy(col("a.pk").as("pa"), col("b.pk").as("pb"))
+          .agg(count(lit(1)).as("n_co"))
+          .filter(col("n_co") >= minSupport)
+          .select("pa", "pb")
     }
+  }
+
+  /** The base `max + 1` that packs an id pair `(a, b)` of column `c`
+    * onto the one BIGINT key `a * base + b`, or None when that packing
+    * is unsound: no rows, a negative id (keys collide and `div`/`pmod`
+    * unpack the wrong ids), or an id above 3037000498 (`base^2` would
+    * pass 2^63). One min/max aggregate over `df`.
+    */
+  private[graft] def pairKeyBase(df: DataFrame, c: String): Option[Long] = {
+    val r = df.agg(min(col(c)), max(col(c))).first()
+    if (r.isNullAt(0) || r.getLong(0) < 0 || r.getLong(1) > 3037000498L) None
+    else Some(r.getLong(1) + 1)
   }
 
   /** Exact triangle count via degree orientation (Chiba-Nishizeki /
@@ -561,27 +571,25 @@ object Graphs {
     // ~170k). Shuffle fewer bytes (optimization guide §2.3): pack both
     // endpoints into ONE bigint key — (2 keys + count) 24 B/row down
     // to 16 B/row, one hash instead of two per probe — whenever the
-    // part-key range provably fits ((mx+1)^2 < 2^63; the guard reads
-    // one max() off the already-materialized checkpoint). Packing is
-    // injective below the bound, so the unpacked (src, dst, w) result
-    // is bit-identical; past the bound (ids above ~3.03e9) the
-    // original two-key aggregate runs unchanged.
-    val mxRow = fpc.agg(max(col("p"))).first()
-    val mxP = if (mxRow.isNullAt(0)) -1L else mxRow.getLong(0)
-    if (mxP >= 0 && mxP <= 3037000498L) {
-      val base = mxP + 1
-      paired
-        .groupBy((col("a.p") * base + col("b.p")).as("pk"))
-        .agg(count(lit(1)).as("w"))
-        .filter(col("w") >= minSupport)
-        .select(expr(s"pk div $base").as("src"),
-                pmod(col("pk"), lit(base)).as("dst"))
-    } else {
-      paired
-        .groupBy(col("a.p").as("src"), col("b.p").as("dst"))
-        .agg(count(lit(1)).as("w"))
-        .filter(col("w") >= minSupport)
-        .select("src", "dst")
+    // part-key range provably allows it ([[pairKeyBase]]; the guard
+    // reads one min/max off the already-materialized checkpoint).
+    // Packing is injective inside the guard, so the unpacked
+    // (src, dst, w) result is bit-identical; outside it (negative ids,
+    // ids above ~3.03e9) the original two-key aggregate runs unchanged.
+    pairKeyBase(fpc, "p") match {
+      case Some(base) =>
+        paired
+          .groupBy((col("a.p") * base + col("b.p")).as("pk"))
+          .agg(count(lit(1)).as("w"))
+          .filter(col("w") >= minSupport)
+          .select(expr(s"pk div $base").as("src"),
+                  pmod(col("pk"), lit(base)).as("dst"))
+      case None =>
+        paired
+          .groupBy(col("a.p").as("src"), col("b.p").as("dst"))
+          .agg(count(lit(1)).as("w"))
+          .filter(col("w") >= minSupport)
+          .select("src", "dst")
     }
   }
 

@@ -22,12 +22,10 @@ import org.apache.spark.sql.functions._
   * join is co-located, and the pattern is the standard idempotent
   * foreachBatch upsert.
   *
-  * Exactly-once: a replayed micro-batch (failure between the write and
-  * the checkpoint commit) must not duplicate store rows, so each
-  * batch's additions land in a `batch_id=N` partition via DYNAMIC
-  * partition overwrite — the replay overwrites its own partition
-  * instead of appending a second copy ([[survivorSink]] is therefore
-  * idempotent per (batch, id), unit-tested by calling it twice).
+  * Exactly-once: each batch's additions land in their own store
+  * directory, which a replay overwrites ([[StoreIO]]'s store
+  * contract), so [[survivorSink]] is idempotent per (batch, id),
+  * unit-tested by calling it twice.
   */
 object StreamingDedup {
 
@@ -57,12 +55,9 @@ object StreamingDedup {
         // (possibly partial) attempt — it overwrites that partition
         .filter(col("batch_id") =!= batchId)
         .select("content_hash")
-      batchSurv.join(seen, Seq("content_hash"), "left_anti")
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(storePath)
+      StoreIO.writeBatch(
+        batchSurv.join(seen, Seq("content_hash"), "left_anti"),
+        storePath, batchId)
   }
 
   /** Current survivors `(content_hash, keep_id)`, the streaming analog

@@ -27,12 +27,12 @@ import org.apache.spark.sql.functions._
   * their join keys (ok / (pa, pb)) so every maintenance join
   * co-locates.
   *
-  * Exactly-once: both stores use the `batch_id=N` dynamic-partition-
-  * overwrite idiom ([[StreamingDedup]]): a replayed batch filters its
-  * own partition out of the read and overwrites it in the write, so
-  * replay is idempotent — and pair counts live as per-batch DELTAS
-  * (summed at serve time) precisely so the store stays append-shaped
-  * under that idiom instead of needing a read-modify-write upsert.
+  * Exactly-once: both stores follow [[StoreIO]]'s store contract: a
+  * replayed batch prunes its own directory from the read and
+  * overwrites it in the write, so replay is idempotent — and pair
+  * counts live as per-batch DELTAS (summed at serve time) precisely
+  * so the store stays append-shaped instead of needing a
+  * read-modify-write upsert.
   */
 object StreamingGraph {
 
@@ -73,16 +73,8 @@ object StreamingGraph {
                 greatest(col("a.pk"), col("b.pk")).as("pb"))
       val delta = nn.unionAll(no)
         .groupBy("pa", "pb").agg(count(lit(1)).as("delta_n"))
-      delta.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(pairPath)
-      fresh.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(itemPath)
+      StoreIO.writeBatch(delta, pairPath, batchId)
+      StoreIO.writeBatch(fresh, itemPath, batchId)
   }
 
   /** Current thresholded edge set `(pa, pb)` — the streaming analog of

@@ -29,9 +29,8 @@ import graft.operators.Dedup
   * probe is an equi-join on (band, 16-bit key) between the batch's
   * O(batch) band rows and the index's band rows (at 100 TB the index
   * would be stored banded — here it is banded on read, same join).
-  * Batch replay is idempotent: both the index and the pair output are
-  * partitioned by batch_id with dynamic partition overwrite, so a
-  * replayed batch overwrites itself ([[StreamingDedup]]'s contract).
+  * Batch replay is idempotent for both the index and the pair output
+  * ([[StoreIO]]'s store contract).
   */
 object StreamingNearDup {
 
@@ -99,14 +98,8 @@ object StreamingNearDup {
                " + bit_count(a.sim_hi ^ b.sim_hi) as bigint)").as("hamming"))
         .filter(col("hamming") <= maxHamming)
         .distinct()
-      cand.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(pairsPath)
-      fps.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(indexPath)
+      StoreIO.writeBatch(cand, pairsPath, batchId)
+      StoreIO.writeBatch(fps, indexPath, batchId)
       graft.Caches.release(spark, fpsIds)
       ()
   }

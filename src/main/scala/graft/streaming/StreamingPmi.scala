@@ -22,9 +22,9 @@ import graft.operators.TextAnalysis
   *
   * Scale shape: per-batch counts are map-side-combined aggregates of
   * the batch only; stores grow with VOCABULARY (vocab² bigrams,
-  * vocab unigrams), not stream length, partitioned by `batch_id` for
-  * the idempotent-replay overwrite ([[StreamingDedup]]'s contract);
-  * the serve-side re-sum is a vocabulary-bounded aggregate.
+  * vocab unigrams), not stream length, one directory per batch
+  * ([[StoreIO]]'s store contract); the serve-side re-sum is a
+  * vocabulary-bounded aggregate.
   */
 object StreamingPmi {
 
@@ -36,19 +36,14 @@ object StreamingPmi {
     */
   def countsSink(bigPath: String, uniPath: String): (DataFrame, Long) => Unit = {
     (batch: DataFrame, batchId: Long) =>
-      TextAnalysis.bigramRowsFrom(batch)
-        .groupBy("a", "b").agg(count(lit(1)).as("c_ab"))
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(bigPath)
-      TextAnalysis.unigramRowsFrom(batch)
-        .groupBy("tok").agg(count(lit(1)).as("c"))
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(uniPath)
-      ()
+      StoreIO.writeBatch(
+        TextAnalysis.bigramRowsFrom(batch)
+          .groupBy("a", "b").agg(count(lit(1)).as("c_ab")),
+        bigPath, batchId)
+      StoreIO.writeBatch(
+        TextAnalysis.unigramRowsFrom(batch)
+          .groupBy("tok").agg(count(lit(1)).as("c")),
+        uniPath, batchId)
   }
 
   /** Batch [[TextAnalysis.tokenPmi]], served from the streamed count

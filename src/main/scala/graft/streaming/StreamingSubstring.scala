@@ -36,7 +36,7 @@ import graft.operators.Dedup
   * duplicated are anti-joined out, so a gram going from 2 to k copies
   * re-emits nothing for the first 2. Batch replay is idempotent: the
   * index, the hit store, and the anti-join all exclude/overwrite the
-  * replayed batch_id partition ([[StreamingDedup]]'s contract).
+  * replayed batch's directory ([[StoreIO]]'s store contract).
   */
 object StreamingSubstring {
 
@@ -104,15 +104,8 @@ object StreamingSubstring {
         .filter(col("nd_b") >= 2 || col("b_one") =!= col("doc_id"))
         .select("doc_id", "pos")
         .join(known, Seq("doc_id", "pos"), "left_anti")
-      batchHits.union(retroHits).distinct()
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(hitsPath)
-      grams.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(indexPath)
+      StoreIO.writeBatch(batchHits.union(retroHits).distinct(), hitsPath, batchId)
+      StoreIO.writeBatch(grams, indexPath, batchId)
       graft.Caches.release(spark, gramIds)
       ()
   }

@@ -190,4 +190,40 @@ class GraphsSpec extends SparkSuite {
       assert(ra <= nc / 2.0 + 1e-6, r.toString)
     }
   }
+
+  test("pair-key packing: part keys straddling zero take the two-key fallback, same pairs") {
+    // shift every part key down by 100 (sf0.001 keys are 0..199): the
+    // old max-only guard packed this range at base 100, where distinct
+    // pairs collide and div/pmod unpack the wrong ids
+    val k = 100L
+    val dir = java.nio.file.Files
+      .createTempDirectory(java.nio.file.Paths.get("target"), "negkeys-").toString
+    Tables.lineitem(spark, sfDir)
+      .select(col("l_orderkey"), (col("l_partkey") - k).as("l_partkey"))
+      .write.parquet(s"$dir/lineitem.parquet")
+    Tables.orders(spark, sfDir).select("o_orderkey", "o_custkey", "o_orderdate")
+      .write.parquet(s"$dir/orders.parquet")
+    assert(Graphs.pairKeyBase(Tables.lineitem(spark, sfDir), "l_partkey").nonEmpty)
+    assert(Graphs.pairKeyBase(Tables.lineitem(spark, dir), "l_partkey").isEmpty)
+    def pairs(df: org.apache.spark.sql.DataFrame, a: String, b: String) =
+      df.select(a, b).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    // coEdges: the plain two-key aggregate over the shifted keys
+    val items = Tables.lineitem(spark, dir)
+      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk")).distinct()
+    val plain = items.as("a").join(items.as("b"),
+        col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
+      .groupBy(col("a.pk").as("pa"), col("b.pk").as("pb")).count()
+    val gotCo = pairs(Graphs.coEdges(spark, dir, minSupport = 1), "pa", "pb")
+    assert(gotCo.exists(_._1 < 0) && gotCo.exists(_._2 >= 0))
+    assert(gotCo == pairs(plain, "pa", "pb"))
+    // seqEdges / marketBasket: a shift keeps every key order, so the
+    // fallback must return the packed path's unshifted result, shifted
+    def shifted(s: Set[(Long, Long)]) = s.map { case (a, b) => (a - k, b - k) }
+    assert(pairs(Graphs.seqEdges(spark, dir, minSupport = 1), "src", "dst") ==
+      shifted(pairs(Graphs.seqEdges(spark, sfDir, minSupport = 1), "src", "dst")))
+    def basket(d: String, off: Long) = graft.operators.Analytics.marketBasket(spark, d)
+      .collect().map(r => (r.getAs[Long]("rk"), r.getAs[Long]("pa") + off,
+        r.getAs[Long]("pb") + off, r.getAs[Long]("n_co"), r.getAs[Double]("lift"))).toSeq
+    assert(basket(dir, k) == basket(sfDir, 0L))
+  }
 }

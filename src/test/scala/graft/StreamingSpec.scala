@@ -1612,7 +1612,7 @@ class StreamingSpec extends SparkSuite {
     // crashed batch 1: stores written, checkpoint never committed
     sink()(chunk2.toDF("doc_id", "text"), 1L)
     // restart from the checkpoint; the engine re-delivers chunk2 as
-    // batch 1 (dynamic partition overwrite absorbs the crashed write),
+    // batch 1 (its per-batch overwrite absorbs the crashed write),
     // then chunk3 continues as batch 2
     ms.addData(chunk2)
     val q2 = newQuery(ms)
@@ -2141,8 +2141,12 @@ class StreamingSpec extends SparkSuite {
     try {
       Seq(b, a).foreach { c => ms2.addData(c); q2.processAllAvailable() }
     } finally q2.stop()
-    assert(rows(graft.streaming.StreamingStats.chiSquare(spark, s"$base/cells")) ==
-      rows(graft.operators.Stats.chiSquare(spark, sfDir)))
+    val wantChi = rows(graft.operators.Stats.chiSquare(spark, sfDir))
+    assert(rows(graft.streaming.StreamingStats.chiSquare(spark, s"$base/cells")) == wantChi)
+    // replayed micro-batch is idempotent
+    graft.streaming.StreamingStats.chiSink(s"$base/cells")(
+      a.toDF("o_orderpriority", "o_orderstatus"), 1L)
+    assert(rows(graft.streaming.StreamingStats.chiSquare(spark, s"$base/cells")) == wantChi)
   }
 
   test("streamed Spearman/Kruskal/Jarque-Bera/Ljung-Box folds reproduce the batch tests") {
