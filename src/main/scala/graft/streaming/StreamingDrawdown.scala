@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming twin of [[graft.operators.Finance.maxDrawdown]] — the
   * live risk monitor: per-symbol state is the single running peak, and
@@ -10,13 +9,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * drawdowns aggregate to the batch per-symbol maxima exactly
   * (StreamingSpec pins it on the real corpus).
   *
-  * Ordering contract: the running peak is SEQUENTIAL state — within a
-  * micro-batch rows sort by (ts, id) (the batch window's exact tick
-  * order); cross-batch parity needs event-time-ordered feeding, the
-  * same honest contract as [[StreamingEma]]. Non-positive prices are
-  * skipped exactly as batch filters them.
-  *
-  * Scale: one double per live symbol key in the state store.
+  * A [[Sequential.fold]] over (ts, id) — the batch window's exact tick
+  * order — under the kernel's ordering contract. Non-positive prices
+  * are skipped exactly as batch filters them. State is one double per
+  * live symbol key.
   */
 object StreamingDrawdown {
 
@@ -30,19 +26,13 @@ object StreamingDrawdown {
 
   def withDrawdown(ticks: Dataset[Tick]): Dataset[DdOut] = {
     import ticks.sparkSession.implicits._
-    ticks
-      .groupByKey(_.symbol)
-      .flatMapGroupsWithState[PeakState, DdOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (sym: String, rows: Iterator[Tick], state: GroupState[PeakState]) =>
-          val ordered = rows.toSeq.sortBy(t => (t.ts.getTime, t.id))
-          var peak = state.getOption.map(_.peak).getOrElse(0.0)
-          val out = ordered.filter(_.price > 0).map { t =>
-            peak = math.max(peak, t.price)
-            DdOut(sym, t.id, t.price, peak, (peak - t.price) / peak)
-          }
-          if (peak > 0) state.update(PeakState(peak))
-          out.iterator
-      }
+    Sequential.fold(ticks)(_.symbol, t => (t.ts.getTime, t.id),
+        PeakState(0.0)) { (st, t) =>
+      if (t.price > 0) {
+        val peak = math.max(st.peak, t.price)
+        (PeakState(peak), Some(DdOut(t.symbol, t.id, t.price, peak,
+          (peak - t.price) / peak)))
+      } else (st, None)
+    }
   }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming formulation of the reference hot path — the reference IS a
   * streaming engine (record-at-a-time asyncio push loop,
@@ -10,9 +9,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * not parity. Count-based per-key sliding windows are NOT expressible
   * with `groupBy(window(...))` (that is time-based); the per-key
   * deque (`financial_engine.py:298,304-307`) maps to arbitrary
-  * stateful processing — `flatMapGroupsWithState` holding the last
-  * n prices per key. (Spark 4's transformWithState is the newer API
-  * for the same shape; this uses the stable one.)
+  * stateful processing — the [[Sequential.fold]] kernel holding the
+  * last n prices per key.
   *
   * Scale: state is hash-partitioned by key across executors, sized
   * n doubles per live key, checkpointed via the state store — the
@@ -39,31 +37,29 @@ object StreamingSma {
   final case class SmaOut(id: String, symbol: String, price: Double,
                           moving_average: Option[Double])
 
-  private def round6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-
   /** Emits every tick, with `moving_average` set only once the key has
     * seen >= n prices (warm-up gate, financial_engine.py:308-310) —
     * identical semantics to the batch `RefPipeline.movingAverage`
     * (stream/batch consistency is asserted in StreamingSpec).
+    *
+    * `ttl` bounds per-key state lifetime (SURVEY §2.8: the reference's
+    * keyed state is unbounded in key cardinality and never expires,
+    * financial_engine.py:298 — at scale that is a leak, since a symbol
+    * that stops ticking holds its window forever). With a TTL, an idle
+    * key's buffer is dropped after `ttl` of processing time and the
+    * warm-up gate restarts from zero when the key reappears — the same
+    * semantics as a fresh key, which is exactly what the reference
+    * does after a restart.
     */
-  def withMovingAverage(ticks: Dataset[Tick], n: Int): Dataset[SmaOut] = {
+  def withMovingAverage(ticks: Dataset[Tick], n: Int,
+                        ttl: Option[java.time.Duration] = None): Dataset[SmaOut] = {
+    require(n >= 1, s"moving average window n must be >= 1, got $n")
     import ticks.sparkSession.implicits._
-    ticks
-      .groupByKey(_.symbol)
-      .flatMapGroupsWithState[SmaState, SmaOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: String, rows: Iterator[Tick], state: GroupState[SmaState]) =>
-          val ordered = rows.toSeq.sortBy(_.id)
-          var buf = state.getOption.map(_.prices).getOrElse(Nil)
-          val out = ordered.map { t =>
-            buf = (buf :+ t.price).takeRight(n)
-            SmaOut(t.id, t.symbol, t.price,
-              if (buf.size == n) Some(round6(buf.sum / n)) else None)
-          }
-          state.update(SmaState(buf))
-          out.iterator
-      }
+    Sequential.fold(ticks)(_.symbol, _.id, SmaState(Nil), ttl) { (st, t) =>
+      val buf = (st.prices :+ t.price).takeRight(n)
+      (SmaState(buf), Some(SmaOut(t.id, t.symbol, t.price,
+        if (buf.size == n) Some(Sequential.round6(buf.sum / n)) else None)))
+    }
   }
 
   /** Time-windowed variant (SURVEY §2.8): hourly tumbling counts with

@@ -21,34 +21,47 @@ class StreamingSpec extends SparkSuite {
 
   test("streaming SMA equals the batch window formulation across micro-batches") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val ms = MemoryStream[Tick]
-    val q = StreamingSma.withMovingAverage(ms.toDS(), n = 5)
-      .writeStream.format("memory").queryName("sma_stream")
-      .outputMode("append").start()
-    try {
-      val data = ticks(14)
-      // three uneven micro-batches — state must carry across them
-      ms.addData(data.take(4))
-      q.processAllAvailable()
-      ms.addData(data.slice(4, 9))
-      q.processAllAvailable()
-      ms.addData(data.drop(9))
-      q.processAllAvailable()
-
-      val streamed = spark.table("sma_stream")
+    val data = ticks(14)
+    val batch = RefPipeline.movingAverage(
+        data.toDF("id", "symbol", "price"), n = 5)
+      .orderBy("id")
+      .select("id", "symbol", "price", "moving_average").collect()
+    def streamed(name: String, microBatches: Seq[Seq[Tick]]): Array[Row] = {
+      val ms = MemoryStream[Tick]
+      val q = StreamingSma.withMovingAverage(ms.toDS(), n = 5)
+        .writeStream.format("memory").queryName(name)
+        .outputMode("append").start()
+      try microBatches.foreach { b => ms.addData(b); q.processAllAvailable() }
+      finally q.stop()
+      spark.table(name)
         .orderBy("id")
         .select("id", "symbol", "price", "moving_average").collect()
-      val batch = RefPipeline.movingAverage(
-          data.toDF("id", "symbol", "price"), n = 5)
-        .orderBy("id")
-        .select("id", "symbol", "price", "moving_average").collect()
-      assert(streamed.length == batch.length)
-      streamed.zip(batch).foreach { case (s, b) =>
-        assert(s == b, s"stream row $s != batch row $b")
+    }
+    // three uneven micro-batches — state must carry across them; and
+    // the same ticks out of id order inside one micro-batch — the
+    // per-batch sort must restore the window order
+    val shuffled = new scala.util.Random(7).shuffle(data)
+    assert(shuffled != data)
+    for ((name, input) <- Seq(
+           "sma_stream" -> Seq(data.take(4), data.slice(4, 9), data.drop(9)),
+           "sma_shuffled" -> Seq(shuffled))) {
+      val rows = streamed(name, input)
+      assert(rows.length == batch.length, name)
+      rows.zip(batch).foreach { case (s, b) =>
+        assert(s == b, s"$name: stream row $s != batch row $b")
       }
       // sanity: warm-up emitted nulls, steady state emitted values
-      assert(streamed.exists(_.isNullAt(3)) && streamed.exists(!_.isNullAt(3)))
-    } finally q.stop()
+      assert(rows.exists(_.isNullAt(3)) && rows.exists(!_.isNullAt(3)))
+    }
+  }
+
+  test("SMA rejects a window below 1 when the plan is built") {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    for (n <- Seq(0, -1)) {
+      val e = intercept[IllegalArgumentException](
+        StreamingSma.withMovingAverage(MemoryStream[Tick].toDS(), n))
+      assert(e.getMessage.contains(s"window n must be >= 1, got $n"))
+    }
   }
 
   test("fan-out delivers each batch to every sink; a failing sink is swallowed (K4)") {
@@ -102,17 +115,13 @@ class StreamingSpec extends SparkSuite {
     assert(overflowedAt == -1 && got.length == 4)
   }
 
-  test("transformWithState SMA state expires after the TTL and the warm-up gate restarts") {
+  test("SMA state expires after the TTL and the warm-up gate restarts") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val old = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val ms = MemoryStream[Tick]
-    // TimeMode.ProcessingTime (required by TTL) keeps the engine
+    // A processing-time timeout (required by the TTL) keeps the engine
     // triggering batches, so processAllAvailable never settles — poll
     // the sink until the expected ids land instead.
-    val q = graft.streaming.StreamingSmaV2.withMovingAverage(
+    val q = StreamingSma.withMovingAverage(
         ms.toDS(), n = 3, ttl = Some(java.time.Duration.ofMillis(300)))
       .writeStream.format("memory").queryName("sma_ttl")
       .outputMode("append").start()
@@ -142,46 +151,7 @@ class StreamingSpec extends SparkSuite {
       ms.addData(Tick("t5", "A", 50.0), Tick("t6", "A", 60.0), Tick("t7", "A", 70.0))
       assert(smaOf("t5", "t6", "t7") == Seq(None, None, Some(60.0)),
         "expired state must not seed the new window; warm-up completes at 3 new prices")
-    } finally {
-      q.stop()
-      old match {
-        case Some(v) => spark.conf.set(key, v)
-        case None    => spark.conf.unset(key)
-      }
-    }
-  }
-
-  test("transformWithState SMA (API v2) equals the batch window formulation") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val old = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val ms = MemoryStream[Tick]
-    val q = graft.streaming.StreamingSmaV2.withMovingAverage(ms.toDS(), n = 5)
-      .writeStream.format("memory").queryName("sma_v2")
-      .outputMode("append").start()
-    try {
-      val data = ticks(12)
-      ms.addData(data.take(7))
-      q.processAllAvailable()
-      ms.addData(data.drop(7))
-      q.processAllAvailable()
-      val streamed = spark.table("sma_v2").orderBy("id")
-        .select("id", "symbol", "price", "moving_average").collect()
-      val batch = RefPipeline.movingAverage(
-          data.toDF("id", "symbol", "price"), n = 5)
-        .orderBy("id")
-        .select("id", "symbol", "price", "moving_average").collect()
-      assert(streamed.length == batch.length)
-      streamed.zip(batch).foreach { case (s, b) => assert(s == b, s"$s != $b") }
-    } finally {
-      q.stop()
-      old match {
-        case Some(v) => spark.conf.set(key, v)
-        case None    => spark.conf.unset(key)
-      }
-    }
+    } finally q.stop()
   }
 
   test("stream-static join enriches ticks against a dimension table") {
